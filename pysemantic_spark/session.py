@@ -1,8 +1,9 @@
 """SparkSession factory tuned for the validation workload.
 
-Local-mode settings follow the sandbox (32 cores / 125 GB); on a real
-cluster the same builder is used minus the master/memory overrides — all
-scale-relevant behavior (AQE, shuffle partitions, Arrow) is set here.
+Local-mode settings are derived from the host: ``local[<cores>]`` and a
+driver heap of about half the physical RAM. On a real cluster the same
+builder is used minus the master/memory overrides — all scale-relevant
+behavior (AQE, shuffle partitions, Arrow) is set here.
 """
 
 from __future__ import annotations
@@ -10,6 +11,15 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """About half the host's physical RAM (``MemTotal``), in MiB. The
+    driver JVM is the whole local-mode cluster, but Python workers and the
+    OS need the other half — a fixed size that fits a large host gets the
+    JVM OOM-killed on a small one."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{phys // 2 // (1 << 20)}m"
 
 
 def get_spark(
@@ -64,7 +74,10 @@ def get_spark(
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         # wide fused check projections + 64-way sketch aggs generate large
         # methods; default 240m code cache fills and disables the JIT
         .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=1g")
