@@ -152,30 +152,47 @@ def cosine_pairs_exact(
         F.col("ids").alias("ids_b"),
         F.col("vecs").alias("vecs_b"),
     )
-    joined = left.join(right, "partner")
+    joined = left.join(right, "partner").select(
+        F.col("ids").alias("ids_a"),
+        F.col("vecs").alias("vecs_a"),
+        "ids_b",
+        "vecs_b",
+        (F.col("blk") == F.col("partner")).alias("same"),
+    )
+    return _verify_block_pairs(joined, threshold, id_type)
+
+
+def _unit_rows(vecs) -> np.ndarray:
+    """Stack a packed block into an L2-normalized float64 matrix (a
+    zero-norm row stays zero, so it scores 0.0 against everything)."""
+    A = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+    n = np.linalg.norm(A, axis=1)
+    n[n == 0] = 1.0
+    return A / n[:, None]
+
+
+def _verify_block_pairs(
+    joined: DataFrame, threshold: float, id_type: str
+) -> DataFrame:
+    """THE exact verifier of both all-pairs paths: one normalized float64
+    GEMM per packed block pair. ``joined`` rows are ``(ids_a, vecs_a,
+    ids_b, vecs_b, same)``; ``same`` marks a block paired with itself,
+    which scores its upper triangle only. Emits (id_a < id_b, cos_sim)
+    for cos_sim ≥ threshold."""
     thr = float(threshold)
 
     def score(batches):
         for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                ids_a = np.asarray(row.ids)
-                A = np.stack([np.asarray(v, dtype=np.float64) for v in row.vecs])
-                na = np.linalg.norm(A, axis=1)
-                na[na == 0] = 1.0
-                An = A / na[:, None]
-                same = row.blk == row.partner
+            for ids_a, vecs_a, ids_b, vecs_b, same in pdf.itertuples(index=False):
+                ids_a = np.asarray(ids_a)
+                An = _unit_rows(vecs_a)
                 if same:
                     G = An @ An.T
-                    ii, jj = np.triu_indices(len(A), k=1)
+                    ii, jj = np.triu_indices(len(An), k=1)
                     ids_b = ids_a
                 else:
-                    ids_b = np.asarray(row.ids_b)
-                    B = np.stack(
-                        [np.asarray(v, dtype=np.float64) for v in row.vecs_b]
-                    )
-                    nb = np.linalg.norm(B, axis=1)
-                    nb[nb == 0] = 1.0
-                    G = An @ (B / nb[:, None]).T
+                    ids_b = np.asarray(ids_b)
+                    G = An @ _unit_rows(vecs_b).T
                     ii, jj = np.unravel_index(np.arange(G.size), G.shape)
                 # threshold on the ROUND-6 value (emitted as-is): the
                 # membership decision is then insensitive to sub-5e-7
@@ -189,7 +206,9 @@ def cosine_pairs_exact(
                     continue
                 ia, ib = ids_a[ii[keep]], ids_b[jj[keep]]
                 lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
-                ok = lo != hi  # hash collisions of the same id never pair
+                # duplicate input ids (or hash collisions of the same id)
+                # never pair with themselves
+                ok = lo != hi
                 yield pd.DataFrame(
                     {"id_a": lo[ok], "id_b": hi[ok], "cos_sim": cos[keep][ok]}
                 )
@@ -680,49 +699,11 @@ def embedding_near_dup_pairs(
         F.col("ids").alias("ids_b"),
         F.col("vecs").alias("vecs_b"),
     )
-    joined = left.join(right, on=["tbl", "bk_b"])
-    thr = float(threshold)
-
-    def score(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                ids_a = np.asarray(row.ids_a)
-                A = np.stack([np.asarray(v, dtype=np.float64) for v in row.vecs_a])
-                na = np.linalg.norm(A, axis=1)
-                na[na == 0] = 1.0
-                An = A / na[:, None]
-                if row.bk_a == row.bk_b:
-                    G = An @ An.T
-                    ii, jj = np.triu_indices(len(A), k=1)
-                    ids_b = ids_a
-                else:
-                    ids_b = np.asarray(row.ids_b)
-                    B = np.stack(
-                        [np.asarray(v, dtype=np.float64) for v in row.vecs_b]
-                    )
-                    nb = np.linalg.norm(B, axis=1)
-                    nb[nb == 0] = 1.0
-                    G = An @ (B / nb[:, None]).T
-                    ii, jj = np.unravel_index(np.arange(G.size), G.shape)
-                # threshold on the ROUND-6 cosine (identical arithmetic to
-                # cosine_pairs_exact — normalized float64 GEMM, numpy round
-                # half-even at 1e-6 — and the SQL oracle thresholds
-                # round(...,6) too), so boundary membership is insensitive
-                # to sub-5e-7 accumulation-order differences between engines
-                cos = np.round(G[ii, jj], 6)
-                keep = cos >= thr
-                if not keep.any():
-                    continue
-                ia, ib = ids_a[ii[keep]], ids_b[jj[keep]]
-                lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
-                ok = lo != hi  # duplicate input ids never pair with themselves
-                yield pd.DataFrame(
-                    {"id_a": lo[ok], "id_b": hi[ok], "cos_sim": cos[keep][ok]}
-                )
-
-    survivors = joined.mapInPandas(
-        score, schema=f"id_a {id_type}, id_b {id_type}, cos_sim double"
+    joined = left.join(right, on=["tbl", "bk_b"]).select(
+        "ids_a", "vecs_a", "ids_b", "vecs_b",
+        (F.col("bk_a") == F.col("bk_b")).alias("same"),
     )
+    survivors = _verify_block_pairs(joined, threshold, id_type)
     # a pair surviving in several (table, bucket-pair) cells is emitted once
     # per cell with the same cosine (identical float64 inputs); max() makes
     # the kept value deterministic even if a BLAS blocking difference ever
