@@ -467,73 +467,31 @@ def train_ivf_centroids(
     return cents
 
 
-def _centroid_dist_exprs(vec_col: Column, centroids: np.ndarray) -> list[Column]:
-    out = []
-    for cent in centroids:
-        lit_vec = F.array(*[F.lit(float(v)) for v in cent])
-        out.append(
-            F.aggregate(
-                F.zip_with(vec_col, lit_vec, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        )
-    return out
-
-
-def ivf_assign_expr(vec_col: Column, centroids: np.ndarray) -> Column:
-    """Nearest-centroid id as a Column expr (argmin of squared L2),
-    evaluated JVM-side against centroid literals."""
-    best_id = F.lit(0)
-    best_d = None
-    for cid, d in enumerate(_centroid_dist_exprs(vec_col, centroids)):
-        if best_d is None:
-            best_d = d
-        else:
-            best_id = F.when(d < best_d, F.lit(cid)).otherwise(best_id)
-            best_d = F.least(best_d, d)
-    return best_id
-
-
-def ivf_assign_arrow(vec_col: Column, centroids: np.ndarray) -> Column:
-    """Arrow-batched twin of :func:`ivf_assign_expr`: every (row, centroid)
-    squared-L2 distance via one BLAS matmul per batch instead of
-    n_centroids interpreted higher-order folds per row (the fold exprs do
-    not whole-stage-codegen — same ~10× gap as the LSH bucket kernel,
-    :func:`hyperplane_buckets_arrow`). Ties break to the LOWEST centroid
-    id in both paths (strict `<` there, first-occurrence argmin here); the
-    accumulation orders differ, so a vector exactly equidistant to two
-    centroids up to float error could flip — the same measure-zero caveat
-    as the bucket kernel, irrelevant off the tie set."""
+def _ivf_probe(vec_col: Column, centroids: np.ndarray, n_probe: int) -> Column:
+    """The ``n_probe`` nearest centroid ids, nearest first, as array<int> —
+    THE IVF assignment kernel of both sides: the corpus keeps element 0
+    (its one cluster), the query keeps all ``n_probe`` (standard IVF
+    multi-probe: a query whose true neighbors straddle a cluster boundary
+    scores the runner-up clusters too). Every (row, centroid) squared-L2
+    distance comes from one BLAS matmul per Arrow batch instead of
+    n_centroids interpreted higher-order folds per row (those do not
+    whole-stage-codegen — same ~10× gap as the LSH bucket kernel,
+    :func:`hyperplane_buckets_arrow`). Ties break to the LOWEST centroid id
+    (stable argsort). Because query and corpus share this arithmetic, a
+    query equal to a corpus vector always probes that vector's cluster
+    first, even when it sits on a boundary up to float error."""
     C = np.ascontiguousarray(np.asarray(centroids, dtype=np.float64))
     c_sq = (C * C).sum(axis=1)
 
-    @F.pandas_udf("int")
-    def _assign(vecs: pd.Series) -> pd.Series:
+    @F.pandas_udf("array<int>")
+    def _probe(vecs: pd.Series) -> pd.Series:
         X = np.stack(vecs.to_numpy()).astype(np.float64, copy=False)
         # argmin_c ||x-c||² = argmin_c (||c||² − 2·x·c); ||x||² is constant
         d = c_sq[None, :] - 2.0 * (X @ C.T)
-        return pd.Series(d.argmin(axis=1).astype("int32"))
+        near = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
+        return pd.Series(list(near.astype("int32")))
 
-    return _assign(vec_col)
-
-
-def ivf_probe_expr(
-    vec_col: Column, centroids: np.ndarray, n_probe: int
-) -> Column:
-    """The ``n_probe`` nearest centroid ids as an array<int> Column —
-    standard IVF multi-probe: a query whose true neighbors straddle a
-    cluster boundary scores the runner-up clusters too. array_sort on
-    (dist, cid) structs is deterministic (ties break by cid)."""
-    dists = F.array(
-        *[
-            F.struct(d.alias("d"), F.lit(cid).alias("c"))
-            for cid, d in enumerate(_centroid_dist_exprs(vec_col, centroids))
-        ]
-    )
-    return F.transform(
-        F.slice(F.array_sort(dists), 1, n_probe), lambda s: s["c"]
-    )
+    return _probe(vec_col)
 
 
 def ivf_topk(
@@ -577,18 +535,13 @@ def ivf_topk(
         corpus.select(
             F.col(id_col).alias("vec_id"),
             F.col(vec_col).alias("_cvec"),
-            # Arrow kernel, not the interpreted fold exprs: the CORPUS side
-            # pays n_centroids × dim interpreted ops per row otherwise
-            # (round 7; the tiny query side keeps the JVM exprs)
-            ivf_assign_arrow(F.col(vec_col), cents).alias("_cluster"),
+            _ivf_probe(F.col(vec_col), cents, 1)[0].alias("_cluster"),
         )
     )
     qb = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(vec_col).alias("_qvec"),
-        F.explode(
-            ivf_probe_expr(F.col(vec_col), cents, n_probe)
-        ).alias("_cluster"),
+        F.explode(_ivf_probe(F.col(vec_col), cents, n_probe)).alias("_cluster"),
     )
     scored = cb.join(F.broadcast(qb), on="_cluster").select(
         "query_id",

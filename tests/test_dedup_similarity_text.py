@@ -393,6 +393,54 @@ def test_ivf_nprobe_recall_dominates(spark, emb_df):
         assert m[0] == pytest.approx(1.0)  # self always in own cluster
 
 
+def _ivf_probe_rows(spark, X, cents, n_probe):
+    df = spark.createDataFrame(
+        [(i, [float(v) for v in x]) for i, x in enumerate(X)],
+        "vec_id long, embedding array<double>",
+    )
+    got = df.select(
+        "vec_id",
+        similarity._ivf_probe(F.col("embedding"), cents, n_probe).alias("probe"),
+        similarity._ivf_probe(F.col("embedding"), cents, 1)[0].alias("own"),
+    ).orderBy("vec_id").collect()
+    return np.array([r["probe"] for r in got]), np.array([r["own"] for r in got])
+
+
+@pytest.mark.parametrize("n_probe", [1, 3])
+def test_ivf_probe_kernel_matches_numpy(spark, n_probe):
+    """The one IVF kernel returns the n_probe nearest centroids by squared
+    L2, nearest first, exactly as a numpy brute force over ||x - c||² with
+    a stable argsort (lowest id wins a tie); and every corpus vector used
+    as a query probes its own corpus-side (element 0) cluster first."""
+    rng = np.random.default_rng(5)
+
+    def brute(X, C):
+        d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
+        return np.argsort(d, axis=1, kind="stable")[:, :n_probe]
+
+    # random centroids and vectors: no ties
+    cents = rng.standard_normal((7, 8))
+    X = rng.standard_normal((300, 8))
+    probe, own = _ivf_probe_rows(spark, X, cents, n_probe)
+    np.testing.assert_array_equal(probe, brute(X, cents))
+    np.testing.assert_array_equal(probe[:, 0], own)
+    # planted EXACT ties (small integers: every distance is exact in
+    # float64): centroid 3 duplicates 0, and the vectors sit equidistant
+    # to two or more centroids
+    cents = np.array(
+        [[1, 0, 0, 0], [0, 1, 0, 0], [0, 0, 2, 0], [1, 0, 0, 0], [-1, 0, 0, 0]],
+        dtype=float,
+    )
+    X = np.array(
+        [[1, 0, 0, 0], [1, 1, 0, 0], [0, 0, 0, 0], [0, 1, 1, 0], [0, 0, 0, 3]],
+        dtype=float,
+    )
+    probe, own = _ivf_probe_rows(spark, X, cents, n_probe)
+    np.testing.assert_array_equal(probe, brute(X, cents))
+    np.testing.assert_array_equal(probe[:, 0], own)
+    assert list(own) == [0, 0, 0, 1, 0]
+
+
 def test_simhash_banding_exhaustive_at_radius(spark):
     """n_bands = max_hamming+1 makes banding exhaustive by pigeonhole: the
     banded pair set must EQUAL the brute-force hamming-<=r pair set of the
