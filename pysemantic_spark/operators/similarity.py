@@ -224,17 +224,14 @@ def hyperplane_buckets_arrow(
     """All tables' LSH bucket ids in ONE Arrow-batched matmul:
     array<long> of length n_tables.
 
-    Matches ``hyperplane_bucket`` with seed ``seed + 7919*t`` for table t
-    (same seeded planes, same sign rule) up to float summation order: the
-    sequential fold and the BLAS matmul accumulate the dot product in
-    different orders, so a dot within ~1e-12 of zero can flip sign and land
-    the vector in a different bucket — harmless for LSH recall (such
-    vectors sit ON the hyperplane; either bucket is equally valid), but the
-    two paths are not guaranteed bit-identical on those measure-zero cases.
-    Computes every (table, plane) dot product as one (batch × dim) @
-    (dim × T·P) numpy matmul instead of T·P interpreted higher-order folds
-    per row — the expression path is not codegen'd and measured ~10× slower
-    at T·P ≳ 100."""
+    Table t draws its ``n_planes`` random hyperplanes from seed
+    ``seed + 7919*t`` (so table 0 of any ``n_tables`` is the same table);
+    bit p of a bucket id is set when the dot with plane p is ≥ 0. Computes
+    every (table, plane) dot product as one (batch × dim) @ (dim × T·P)
+    numpy matmul instead of T·P interpreted higher-order folds per row —
+    such a fold path is not codegen'd and measured ~10× slower at
+    T·P ≳ 100. A dot within float error of zero sits ON a hyperplane, where
+    either bucket is equally valid for LSH recall."""
     planes = np.concatenate(
         [
             np.random.default_rng(seed + 7919 * t).standard_normal((n_planes, dim))
@@ -254,29 +251,6 @@ def hyperplane_buckets_arrow(
         return pd.Series(list(buckets))
 
     return _buckets(vec_col)
-
-
-def hyperplane_bucket(vec_col: Column, dim: int, n_planes: int = 12, seed: int = 42) -> Column:
-    """LSH bucket id: sign pattern of dot products with seeded random
-    hyperplanes, packed into an int. Deterministic across runs/workers
-    (planes generated driver-side from the seed and folded into the plan
-    as literals)."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-    bucket = F.lit(0)
-    for p in range(n_planes):
-        row = planes[p]
-        dot = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.array(*[F.lit(float(v)) for v in row]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(dot >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return bucket
 
 
 def lsh_bucketed_topk(
@@ -305,11 +279,9 @@ def lsh_bucketed_topk(
     (1−p)^L. Probes expand ONLY the broadcast query side (L·(n_planes+1)
     rows per query); the corpus is hashed once and its vectors are never
     shuffled — candidates are (query_id, vec_id) pairs, vectors join back
-    by id for the exact scoring of candidates only.
-
-    Single-table keeps the direct bucket equi-join (a pair matches at most
-    one probe, no dedup needed); multi-table distinct()s the candidate id
-    pairs so each pair pays the exact cosine once."""
+    by id for the exact scoring of candidates only; the candidate id pairs
+    are distinct()ed so a pair colliding in several tables pays the exact
+    cosine once."""
     if n_probe_bits not in (0, 1):
         raise ValueError("n_probe_bits supports 0 (single) or 1 (multi-probe)")
     if n_tables < 1:
@@ -317,32 +289,6 @@ def lsh_bucketed_topk(
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("vec_id").asc()
     )
-    if n_tables == 1:
-        cb = corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("_cvec"),
-            hyperplane_bucket(F.col(vec_col), dim, n_planes, seed).alias("_bucket"),
-        )
-        qbase = hyperplane_bucket(F.col(vec_col), dim, n_planes, seed)
-        probe_exprs = [qbase]
-        if n_probe_bits == 1:
-            probe_exprs += [qbase.bitwiseXOR(F.lit(1 << p)) for p in range(n_planes)]
-        qb = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("_qvec"),
-            F.explode(F.array(*probe_exprs)).alias("_bucket"),
-        )
-        scored = cb.join(F.broadcast(qb), on="_bucket").select(
-            "query_id",
-            "vec_id",
-            F.round(cosine(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
-        )
-        return (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .drop("__rn")
-        )
-
     from pysemantic_spark.operators.dedup import _materialize
 
     cb = _materialize(
