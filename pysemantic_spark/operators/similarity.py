@@ -86,29 +86,6 @@ def cosine_topk(
     )
 
 
-def cosine_arrow(a: Column, b: Column) -> Column:
-    """Vectorized cosine via one Arrow-batched pandas_udf.
-
-    The zip_with/aggregate expression path (:func:`cosine`) is interpreted
-    (higher-order functions do not codegen) — fine for n_queries × k rows,
-    ~10× too slow for the 10^6-candidate verify stages. Float caveat: numpy
-    accumulates the dot product in a different order than the sequential
-    JVM fold, so results can differ in the last ulp; do any rounding with
-    F.round on the output (Spark HALF_UP), never inside numpy (HALF_EVEN).
-    Zero-norm vectors score 0.0 (never NaN)."""
-
-    @F.pandas_udf("double")
-    def _cos(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        xa = np.stack(xs.to_numpy())
-        ya = np.stack(ys.to_numpy())
-        num = np.einsum("ij,ij->i", xa, ya)
-        den = np.linalg.norm(xa, axis=1) * np.linalg.norm(ya, axis=1)
-        out = np.divide(num, den, out=np.zeros_like(num), where=den != 0)
-        return pd.Series(out)
-
-    return _cos(a, b)
-
-
 def cosine_pairs_exact(
     df: DataFrame,
     id_col: str = "vec_id",

@@ -298,20 +298,6 @@ def test_cosine_pairs_exact_matches_numpy(spark, emb_df):
                 assert v == pytest.approx(exact[k_], abs=2e-6)
 
 
-def test_cosine_arrow_matches_interpreted(spark, emb_df):
-    df, vecs = emb_df
-    pairs = df.alias("a").crossJoin(df.alias("b")).filter(
-        F.col("a.vec_id") < F.col("b.vec_id")
-    ).limit(200)
-    got = pairs.select(
-        similarity.cosine_arrow(F.col("a.embedding"), F.col("b.embedding")).alias("ca"),
-        similarity.cosine(F.col("a.embedding"), F.col("b.embedding")).alias("ci"),
-    ).collect()
-    assert len(got) == 200
-    for r in got:
-        assert r["ca"] == pytest.approx(r["ci"], abs=1e-9)
-
-
 def test_near_dup_multiprobe_recall_dominates(spark):
     """1-bit multi-probe candidates per table are a strict superset of the
     exact-bucket candidates, so recall at equal tables can only rise."""
