@@ -37,3 +37,14 @@ class DriftDetectedError(Exception):
     def __init__(self, message: str, report=None):
         super().__init__(message)
         self.report = report
+
+
+class EmbeddingDimensionError(ValueError):
+    """Raised when an embedding row's length differs from the expected
+    dimension — the operator's ``dim``, the centroids' width, or the first
+    row of the block it is packed with."""
+
+    def __init__(self, expected: int, found: int):
+        super().__init__(f"embedding row has length {found}, expected {expected}")
+        self.expected = expected
+        self.found = found

@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pysemantic_spark.errors import EmbeddingDimensionError
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -64,11 +66,11 @@ def cosine_topk(
 
     Queries broadcast (small side); per-query top-k via window row_number —
     Catalyst turns the per-group sort into partial top-k with AQE.
-    Ties broken by vec_id for determinism."""
-    q = queries.select(
+    Ties broken by vec_id for determinism. NULL vectors score nothing."""
+    q = queries.filter(F.col(vec_col).isNotNull()).select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
     )
-    scored = corpus.select(
+    scored = corpus.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_cvec")
     ).crossJoin(F.broadcast(q))
     scored = scored.select(
@@ -112,8 +114,11 @@ def cosine_pairs_exact(
     # vectors shuffle in their SOURCE element type (round 7): the kernel
     # below upcasts to float64 before any arithmetic, and float32→float64
     # is exact, so results are bit-identical while a float32 corpus moves
-    # half the bytes through the n_blocks/2-fold all-pairs shuffle
-    base = df.select(
+    # half the bytes through the n_blocks/2-fold all-pairs shuffle. A NULL
+    # vector never pairs: it is dropped BEFORE packing, because
+    # collect_list would skip the vector but keep its id, shifting every
+    # later id of the block onto the wrong vector
+    base = df.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).alias("vec"),
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("blk"),
@@ -139,10 +144,24 @@ def cosine_pairs_exact(
     return _verify_block_pairs(joined, threshold, id_type)
 
 
-def _unit_rows(vecs) -> np.ndarray:
+def _stack(vecs, dim: int | None = None) -> np.ndarray:
+    """THE one place vector rows enter numpy: an (n, dim) float64 matrix
+    (float32 → float64 is exact). ``dim`` defaults to the first row's
+    length; a row of any other length raises EmbeddingDimensionError
+    instead of a numpy shape error. NULL rows never get here: every
+    operator filters them before hashing or packing."""
+    lens = np.fromiter(map(len, vecs), dtype=np.int64, count=len(vecs))
+    want = int(lens[0]) if dim is None else int(dim)
+    bad = lens != want
+    if bad.any():
+        raise EmbeddingDimensionError(want, int(lens[bad][0]))
+    return np.stack(vecs).astype(np.float64, copy=False)
+
+
+def _unit_rows(vecs, dim: int | None = None) -> np.ndarray:
     """Stack a packed block into an L2-normalized float64 matrix (a
     zero-norm row stays zero, so it scores 0.0 against everything)."""
-    A = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+    A = _stack(vecs, dim)
     n = np.linalg.norm(A, axis=1)
     n[n == 0] = 1.0
     return A / n[:, None]
@@ -169,7 +188,7 @@ def _verify_block_pairs(
                     ids_b = ids_a
                 else:
                     ids_b = np.asarray(ids_b)
-                    G = An @ _unit_rows(vecs_b).T
+                    G = An @ _unit_rows(vecs_b, An.shape[1]).T
                     ii, jj = np.unravel_index(np.arange(G.size), G.shape)
                 # threshold on the ROUND-6 value (emitted as-is): the
                 # membership decision is then insensitive to sub-5e-7
@@ -221,7 +240,7 @@ def hyperplane_buckets_arrow(
 
     @F.pandas_udf("array<long>")
     def _buckets(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy())  # (batch, dim)
+        mat = _stack(vecs.to_numpy(), dim)  # (batch, dim)
         signs = (mat @ weights) >= 0  # (batch, T*P)
         bits = signs.reshape(len(mat), n_tables, n_planes)
         buckets = (bits * bit_vals).sum(axis=2)  # (batch, T)
@@ -269,7 +288,7 @@ def lsh_bucketed_topk(
     from pysemantic_spark.operators.dedup import _materialize
 
     cb = _materialize(
-        corpus.select(
+        corpus.filter(F.col(vec_col).isNotNull()).select(
             F.col(id_col).alias("vec_id"),
             F.col(vec_col).alias("_cvec"),
             hyperplane_buckets_arrow(
@@ -280,7 +299,7 @@ def lsh_bucketed_topk(
     corp_buckets = cb.select(
         "vec_id", F.posexplode("_bks").alias("_table", "_bucket")
     )
-    q_aliased = queries.select(
+    q_aliased = queries.filter(F.col(vec_col).isNotNull()).select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
     )
     qprobes = q_aliased.select(
@@ -350,7 +369,7 @@ def train_ivf_centroids(
     adequate for k-means seeding unless the table is pathologically
     ordered by the embedding itself or determinism across layouts matters
     (pass sample_fraction in those cases)."""
-    sel = corpus.select(vec_col)
+    sel = corpus.select(vec_col).filter(F.col(vec_col).isNotNull())
     if sample_fraction is not None:
         h = F.xxhash64(F.lit(int(seed)), F.col(vec_col))
         sel = sel.withColumn("_h", h)
@@ -363,7 +382,7 @@ def train_ivf_centroids(
         )
     else:
         sample = sel.limit(sample_size * 4).toPandas()[vec_col]
-    x = np.array([np.asarray(v, dtype=np.float64) for v in sample])
+    x = _stack(sample.to_numpy(), dim)
     # canonicalize the sample ORDER driver-side (lexicographic on vector
     # values): limit()/toPandas() row order follows partition layout and
     # scheduling, so without this the k-means seeding — and therefore the
@@ -408,7 +427,7 @@ def _ivf_probe(vec_col: Column, centroids: np.ndarray, n_probe: int) -> Column:
 
     @F.pandas_udf("array<int>")
     def _probe(vecs: pd.Series) -> pd.Series:
-        X = np.stack(vecs.to_numpy()).astype(np.float64, copy=False)
+        X = _stack(vecs.to_numpy(), C.shape[1])
         # argmin_c ||x-c||² = argmin_c (||c||² − 2·x·c); ||x||² is constant
         d = c_sq[None, :] - 2.0 * (X @ C.T)
         near = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
@@ -455,13 +474,13 @@ def ivf_topk(
     from pysemantic_spark.operators.dedup import _materialize
 
     cb = _materialize(
-        corpus.select(
+        corpus.filter(F.col(vec_col).isNotNull()).select(
             F.col(id_col).alias("vec_id"),
             F.col(vec_col).alias("_cvec"),
             _ivf_probe(F.col(vec_col), cents, 1)[0].alias("_cluster"),
         )
     )
-    qb = queries.select(
+    qb = queries.filter(F.col(vec_col).isNotNull()).select(
         F.col(query_id_col).alias("query_id"),
         F.col(vec_col).alias("_qvec"),
         F.explode(_ivf_probe(F.col(vec_col), cents, n_probe)).alias("_cluster"),
@@ -534,8 +553,9 @@ def embedding_near_dup_pairs(
     # _vec keeps the SOURCE element type (round 7): the GEMM kernel
     # upcasts to float64 (exact from float32), so a float32 corpus
     # shuffles half the bytes through the bucket groupBy and the
-    # bucket-pair join with bit-identical cosines
-    base = df.select(
+    # bucket-pair join with bit-identical cosines; NULL vectors are dropped
+    # before hashing and packing, as in cosine_pairs_exact
+    base = df.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_vec"),
         # one Arrow matmul for all tables' buckets — NOT n_tables

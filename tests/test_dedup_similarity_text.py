@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import itertools
+import re
 
 import numpy as np
 import pandas as pd
@@ -377,6 +378,104 @@ def test_ivf_nprobe_recall_dominates(spark, emb_df):
         for rank, sim in enumerate(s_):
             assert m[rank] >= sim - 1e-9, (q, rank)
         assert m[0] == pytest.approx(1.0)  # self always in own cluster
+
+
+# --- NULL and ragged embedding rows ----------------------------------------
+
+def _with_rows(spark, vecs, extra):
+    """(with, without): the 8-d fixture vectors with ``extra`` (id, vector)
+    rows placed FIRST, so any id/vector misalignment shifts real rows."""
+    base = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    schema = "vec_id long, embedding array<double>"
+    return (
+        spark.createDataFrame(extra + base, schema),
+        spark.createDataFrame(base, schema),
+    )
+
+
+def test_cosine_pairs_exact_null_row_never_pairs(spark):
+    """A NULL vector is dropped before packing: collect_list skips the
+    vector but would keep its id, shifting later ids onto the wrong
+    vectors. Six 4-d vectors, NULL at id 1: the one true pair is (4, 5)."""
+    vecs = [[1, 0, 0, 0], None, [0, 1, 0, 0], [0, 0, 1, 0], [0, 0, 0, 1],
+            [0, 0, 0, 2]]
+    schema = "vec_id long, embedding array<double>"
+    rows = [(i, None if v is None else [float(x) for x in v])
+            for i, v in enumerate(vecs)]
+    with_null = spark.createDataFrame(rows, schema).coalesce(1)
+    without = spark.createDataFrame([r for r in rows if r[1] is not None], schema)
+    for n_blocks in (1, 3):
+        def pairs(df):
+            return {tuple(r) for r in similarity.cosine_pairs_exact(
+                df, threshold=0.9, n_blocks=n_blocks).collect()}
+        assert pairs(with_null) == pairs(without) == {(4, 5, 1.0)}
+
+
+def test_embedding_near_dup_pairs_null_row_never_pairs(spark, emb_df):
+    _, vecs = emb_df
+    with_null, without = _with_rows(spark, vecs, [(100, None), (101, None)])
+
+    def pairs(df):
+        return sorted(map(tuple, similarity.embedding_near_dup_pairs(
+            df, dim=8, threshold=0.6, n_planes=4, n_tables=4, n_probe_bits=1
+        ).collect()))
+
+    got = pairs(with_null)
+    assert got == pairs(without)
+    assert (0, 7, 1.0) in got
+
+
+def test_topk_null_rows_never_candidates(spark, emb_df):
+    """NULL corpus rows are never candidates and NULL queries score
+    nothing, in both approximate top-k paths."""
+    _, vecs = emb_df
+    with_null, without = _with_rows(spark, vecs, [(100, None)])
+
+    def queries(df):
+        return df.filter(F.col("vec_id").isin(0, 5, 100)).select(
+            F.col("vec_id").alias("query_id"), "embedding")
+
+    for op, kw in (
+        (similarity.lsh_bucketed_topk, dict(n_planes=4, n_tables=2)),
+        (similarity.ivf_topk, dict(n_centroids=4, n_probe=2)),
+    ):
+        def topk(df):
+            return sorted(map(tuple, op(df, queries(df), dim=8, k=5, **kw).collect()))
+
+        got = topk(with_null)
+        assert got == topk(without), op.__name__
+        assert {q for q, _, _ in got} == {0, 5}, op.__name__
+
+
+def test_ragged_row_raises_named_error(spark, emb_df):
+    """An embedding whose length is not the operator's dimension raises
+    EmbeddingDimensionError naming both lengths, from every operator that
+    stacks vectors (raised in a Python worker, Spark carries the name and
+    message in its exception)."""
+    _, vecs = emb_df
+    df, _ = _with_rows(spark, vecs, [(100, [1.0] * 7)])
+    queries = df.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding")
+
+    def raises_named(run, msg):
+        with pytest.raises(Exception) as ei:
+            run().collect()
+        # driver-side (IVF training) the error itself; worker-side Spark's
+        # exception, whose text carries the worker traceback
+        assert re.search(f"EmbeddingDimensionError: {msg}",
+                         f"{ei.type.__name__}: {ei.value}")
+
+    named = "embedding row has length 7, expected 8"
+    raises_named(lambda: similarity.embedding_near_dup_pairs(
+        df, dim=8, threshold=0.9), named)
+    raises_named(lambda: similarity.lsh_bucketed_topk(
+        df, queries, dim=8, k=3), named)
+    raises_named(lambda: similarity.ivf_topk(
+        df, queries, dim=8, k=3, n_centroids=4), named)
+    # cosine_pairs_exact has no dim: a block's first row sets it
+    raises_named(lambda: similarity.cosine_pairs_exact(
+        df, threshold=0.9, n_blocks=2),
+        "embedding row has length (7, expected 8|8, expected 7)")
 
 
 def _ivf_probe_rows(spark, X, cents, n_probe):
