@@ -1,4 +1,4 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (array<float|double>).
 
 - `cosine_topk`         — exact brute force: broadcast the (small) query
                           set, fused JVM dot products via zip_with/aggregate,
@@ -15,9 +15,25 @@
                           multi-probe) so each query only scores its
                           buckets' candidates; recall traded via
                           n_planes/n_tables/probe count.
+- `ivf_topk`            — sub-linear path: k-means coarse clusters trained
+                          on a driver-side sample; each query scores only
+                          its n_probe nearest clusters.
 - `embedding_near_dup_pairs` — near-duplicate detection: cosine ≥ threshold
                           pairs via multi-table (optionally multi-probe)
                           LSH bucket self-join + exact verify.
+
+One implementation per vector job, shared by every operator:
+
+- rows → numpy: `_stack` (NULL vectors are filtered before it by every
+  operator; a row of the wrong length raises EmbeddingDimensionError);
+- top-k scoring: the interpreted `cosine` in `_score_topk` (only the
+  candidate rows of n_queries reach it);
+- all-pairs verify: `_verify_block_pairs`, one normalized float64 GEMM per
+  packed block pair, for both `cosine_pairs_exact` and the near-dup path;
+- LSH buckets: `hyperplane_buckets_arrow`, one matmul for all tables (a
+  single table is ``n_tables=1``);
+- IVF assignment: `_ivf_probe`, the n_probe nearest centroids from one
+  matmul (the corpus keeps the nearest, the query all n_probe).
 
 At 100 TB the corpus side stays partition-local in the top-k/near-dup
 paths: the only shuffles are on bucket ids (bounded cardinality) and the
@@ -54,6 +70,26 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _score_topk(cand: DataFrame, k: int) -> DataFrame:
+    """Score ``(query_id, vec_id, _cvec, _qvec)`` candidate rows with the
+    interpreted :func:`cosine` (rounded to 6 dp) and keep each query's top
+    k, ties broken by vec_id for determinism — the shared tail of the
+    three top-k paths."""
+    scored = cand.select(
+        "query_id",
+        "vec_id",
+        F.round(cosine(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("vec_id").asc()
+    )
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .drop("__rn")
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -70,22 +106,10 @@ def cosine_topk(
     q = queries.filter(F.col(vec_col).isNotNull()).select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
     )
-    scored = corpus.filter(F.col(vec_col).isNotNull()).select(
+    cand = corpus.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_cvec")
     ).crossJoin(F.broadcast(q))
-    scored = scored.select(
-        "query_id",
-        "vec_id",
-        F.round(cosine(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _score_topk(cand, k)
 
 
 def cosine_pairs_exact(
@@ -282,9 +306,6 @@ def lsh_bucketed_topk(
         raise ValueError("n_probe_bits supports 0 (single) or 1 (multi-probe)")
     if n_tables < 1:
         raise ValueError("n_tables must be >= 1")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
     from pysemantic_spark.operators.dedup import _materialize
 
     cb = _materialize(
@@ -321,19 +342,11 @@ def lsh_bucketed_topk(
         .select("query_id", "vec_id")
         .distinct()
     )
-    scored = (
-        cand.join(cb.select("vec_id", "_cvec"), "vec_id")
-        .join(F.broadcast(q_aliased), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
-        )
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
+    return _score_topk(
+        cand.join(cb.select("vec_id", "_cvec"), "vec_id").join(
+            F.broadcast(q_aliased), "query_id"
+        ),
+        k,
     )
 
 
@@ -485,19 +498,7 @@ def ivf_topk(
         F.col(vec_col).alias("_qvec"),
         F.explode(_ivf_probe(F.col(vec_col), cents, n_probe)).alias("_cluster"),
     )
-    scored = cb.join(F.broadcast(qb), on="_cluster").select(
-        "query_id",
-        "vec_id",
-        F.round(cosine(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _score_topk(cb.join(F.broadcast(qb), on="_cluster"), k)
 
 
 def embedding_near_dup_pairs(
@@ -532,7 +533,7 @@ def embedding_near_dup_pairs(
     grouped once per (table, bucket); each bucket is verified against
     itself and (with probing) its one-bit-flip partner buckets by ONE
     normalized float64 GEMM per bucket pair inside mapInPandas — the same
-    arithmetic as :func:`cosine_pairs_exact` — and only SURVIVING pairs
+    verifier as :func:`cosine_pairs_exact` — and only SURVIVING pairs
     (cos ≥ threshold) leave the task, deduplicated across tables by a tiny
     groupBy. The previous plan materialized every colliding id pair before
     verification (distinct over the candidate stream, then two joins
