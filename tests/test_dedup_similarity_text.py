@@ -427,7 +427,7 @@ def test_embedding_near_dup_pairs_null_row_never_pairs(spark, emb_df):
 
 def test_topk_null_rows_never_candidates(spark, emb_df):
     """NULL corpus rows are never candidates and NULL queries score
-    nothing, in both approximate top-k paths."""
+    nothing, in the exact and both approximate top-k paths."""
     _, vecs = emb_df
     with_null, without = _with_rows(spark, vecs, [(100, None)])
 
@@ -436,11 +436,12 @@ def test_topk_null_rows_never_candidates(spark, emb_df):
             F.col("vec_id").alias("query_id"), "embedding")
 
     for op, kw in (
-        (similarity.lsh_bucketed_topk, dict(n_planes=4, n_tables=2)),
-        (similarity.ivf_topk, dict(n_centroids=4, n_probe=2)),
+        (similarity.cosine_topk, {}),
+        (similarity.lsh_bucketed_topk, dict(dim=8, n_planes=4, n_tables=2)),
+        (similarity.ivf_topk, dict(dim=8, n_centroids=4, n_probe=2)),
     ):
         def topk(df):
-            return sorted(map(tuple, op(df, queries(df), dim=8, k=5, **kw).collect()))
+            return sorted(map(tuple, op(df, queries(df), k=5, **kw).collect()))
 
         got = topk(with_null)
         assert got == topk(without), op.__name__
