@@ -67,12 +67,12 @@ def _read(
     downstream projection (regex checks, shingling, hashing) was
     single-digit-threaded on a 32-core host. When the scan cannot split
     to the session's parallelism AND the table is small enough that one
-    round-robin exchange is trivial, repartition right after the read
-    (guide §2.5: "one huge unsplittable file … repartition immediately
-    after the read"). Deterministic: round-robin repartition sorts before
-    redistributing (SPARK-23207), and every declared query is
-    row-order-insensitive. At cluster scale inputs arrive as many files
-    (rg ≫ parallelism) and this is a no-op."""
+    exchange is trivial, hash-repartition on the leading column right
+    after the read (guide §2.5: "one huge unsplittable file … repartition
+    immediately after the read"). Deterministic: hash partitioning is a
+    per-row function, and every declared query is row-order-insensitive.
+    At cluster scale inputs arrive as many files (rg ≫ parallelism) and
+    this is a no-op."""
     path = f"{sf_dir}/{table}.parquet"
     df = spark.read.parquet(path)
     par = spark.sparkContext.defaultParallelism
@@ -304,11 +304,11 @@ def q_minhash_lsh_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFrame
 def q_simhash_neardups_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs — FULL value oracle (upgraded from rows-only
     in round 3): the portable 60-bit md5 token hash is byte-identical in
-    DuckDB, and n_bands = max_hamming+1 = 9 makes the banding exhaustive by
-    pigeonhole (any pair within hamming ≤ 8 matches ≥ 1 of 9 disjoint
-    bands), so the banded+verified output EQUALS the exact hamming-≤8 pair
-    set that the oracle computes brute-force from its own identical
-    fingerprints."""
+    DuckDB, and the candidate join is exhaustive by pigeonhole (any pair
+    within hamming ≤ 8 agrees within ≤ 2 bits on one of 3 disjoint 20-bit
+    chunks, and every ≤2-bit flip of each chunk is probed), so the
+    joined+verified output EQUALS the exact hamming-≤8 pair set that the
+    oracle computes brute-force from its own identical fingerprints."""
     docs = _read(spark, sf_dir, "documents")
     pairs = dedup.simhash_near_dup_pairs(
         docs, "doc_id", "text", max_hamming=8, portable_hash=True
@@ -461,10 +461,10 @@ def q_ngram_prefix_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFram
 
 def q_simhash_wide_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-word (2×60-bit portable md5) SimHash near-dups at radius 9 —
-    the round-4 SCALE configuration: 10 exhaustive bands of exactly 12
-    bits each (the width floor below which band self-joins go quadratic;
-    no warning fires), impossible on a single 60-bit word where radius 9
-    would force 6-bit bands. Radius 9/120 sits just below the corpus's
+    the round-4 SCALE configuration: the candidate join takes 10
+    exhaustive bands (k=0) of exactly 12 bits each (the width floor below
+    which band self-joins go quadratic; no warning fires), impossible on a
+    single 60-bit word where radius 9 would force 6-bit bands. Radius 9/120 sits just below the corpus's
     random-pair noise floor (the hamming histogram's bulk starts ~12), so
     the output is the true near-dup set: 21 pairs at sf0.01, 345 at
     sf0.1. Fully value-oracled: DuckDB rebuilds both md5 words

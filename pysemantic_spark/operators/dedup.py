@@ -9,7 +9,9 @@ Four families, all shuffle-conscious:
 - MinHash+LSH:  shingle → K minhashes (xxhash64 with per-hash seed mix) →
                 band buckets → pairs within buckets → exact-Jaccard verify.
 - SimHash:      64-bit token-hash bit-vote fingerprint; near-dup = small
-                Hamming distance, candidates via 16-bit band join.
+                Hamming distance, candidates via one pigeonhole chunk join
+                (exact chunk values against their ≤k-bit flips; k = 0 is
+                exhaustive banding).
 
 Scale notes (100 TB / 10^9 docs):
 - The shingle self-join shuffles on the shingle; ultra-common shingles are
@@ -24,8 +26,11 @@ from __future__ import annotations
 
 import hashlib
 import logging
+import operator
 import re
 import warnings
+from functools import reduce
+from itertools import combinations
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -1058,8 +1063,6 @@ def _word_hash(w: int, portable_hash: bool) -> "F.Column":
     engine with md5 (DuckDB: ``('0x'||substr(md5(t),1+15*w,15))::BIGINT``).
     Scale mode uses seeded xxhash64 — unlimited words, faster per token."""
     if portable_hash:
-        if w > 1:
-            raise ValueError("portable_hash supports at most 2 words (md5 is 128 bits)")
         return F.conv(F.substring(F.md5("t"), 1 + 15 * w, 15), 16, 10).cast("long")
     return F.xxhash64(F.lit(f"simhash-word-{w}"), F.col("t"))
 
@@ -1074,10 +1077,10 @@ def simhash_fingerprints(
 ) -> DataFrame:
     """SimHash per doc: per-token hash, bit-vote, sign → bits.
 
-    Explode tokens → for each bit position sum(±1) → assemble the long.
-    n_bits conditional-sum aggs, all map-side combinable. Returns
-    (_id, simhash, band0..band{n_bands-1}: near-equal contiguous bit
-    chunks for Hamming-candidate joins).
+    Each bit of a word is set iff strictly more of the doc's tokens have
+    that bit set in their hash than clear (words from
+    :func:`_simhash_words`). Returns (_id, simhash, band0..band{n_bands-1}:
+    near-equal contiguous bit chunks for Hamming-candidate joins).
 
     ``portable_hash=False`` (scale default): 64-bit xxhash64 per token,
     seeded per word.
@@ -1096,37 +1099,26 @@ def simhash_fingerprints(
     scale-killer); two words give 9 bands of ~14 bits (~16k buckets).
     The radius scales with width (same bit-flip rate per edited token),
     so compare radii as a FRACTION of n_bits across widths. Bands are
-    assigned to words round-robin and split within each word, remaining
-    disjoint and covering all bits — the pigeonhole exhaustiveness
-    argument in :func:`simhash_near_dup_pairs` is width-independent.
+    laid out by :func:`_simhash_chunks` — spread over the words and split
+    within each word, disjoint — so the pigeonhole exhaustiveness
+    argument in :func:`_simhash_scheme` is width-independent.
     Emits a computed-width warning when any band is narrower than 12
     bits (candidate-explosion risk at corpus scale).
 
     Output: (_id, simhash[, simhash1..simhash{W-1}], band0..band{B-1}).
     Word 0 keeps the name ``simhash`` so single-word callers (and the
     portable DuckDB oracle) are unchanged."""
-    tok = df.select(
-        F.col(id_col).alias("_id"), F.explode(tokens(text_col)).alias("t")
-    )
-    return _simhash_fps_on_tok(tok, n_bands, portable_hash, n_words)
+    tokf = df.select(F.col(id_col).alias("_id"), tokens(text_col).alias("_tok"))
+    chunks = _simhash_chunks(60 if portable_hash else 64, n_words, n_bands)
+    _warn_narrow(chunks)
+    fps = _simhash_words(tokf, portable_hash, n_words)
+    bands = [v.alias(f"band{b}") for b, v in enumerate(_chunk_values(fps, chunks))]
+    return fps.select("*", *bands)
 
 
-def _band_layout(
-    n_bands: int, portable_hash: bool, n_words: int
-) -> tuple[int, list[str], list[int]]:
-    """(word_bits, word_names, bands_per_word) of a fingerprint layout,
-    emitting the narrow-band warning — shared by the JVM agg path and the
-    Arrow fingerprint path so both warn identically."""
-    word_bits = 60 if portable_hash else 64
-    word_names = ["simhash"] + [f"simhash{w}" for w in range(1, n_words)]
-    # distribute bands over words (near-equal counts), widths within word
-    bands_per_word = _band_widths(n_bands, n_words) if n_words > 1 else [n_bands]
-    min_width = min(
-        w
-        for nb in bands_per_word
-        if nb > 0
-        for w in _band_widths(word_bits, nb)
-    )
+def _warn_narrow(chunks: list[tuple[int, int, int]]) -> None:
+    """Warn when a banding layout's narrowest chunk is under 12 bits."""
+    min_width = min(width for _, _, width in chunks)
     if min_width < 12:
         warnings.warn(
             f"simhash banding: narrowest band is {min_width} bits "
@@ -1135,29 +1127,6 @@ def _band_layout(
             f"(n_words) or lower the radius/bands",
             stacklevel=3,
         )
-    return word_bits, word_names, bands_per_word
-
-
-def _attach_band_cols(
-    out: DataFrame,
-    word_names: list[str],
-    bands_per_word: list[int],
-    word_bits: int,
-) -> DataFrame:
-    """Append band0..band{B-1} columns (contiguous bit chunks per word)."""
-    band_id = 0
-    for w, nb in enumerate(bands_per_word):
-        offset = 0
-        for width in _band_widths(word_bits, nb) if nb > 0 else []:
-            out = out.withColumn(
-                f"band{band_id}",
-                F.shiftrightunsigned(F.col(word_names[w]), offset).bitwiseAND(
-                    F.lit((1 << width) - 1)
-                ),
-            )
-            offset += width
-            band_id += 1
-    return out
 
 
 _SIMHASH_WORD_UDFS: dict[int, object] = {}
@@ -1208,53 +1177,43 @@ def _simhash_words_udf(n_words: int):
     return _SIMHASH_WORD_UDFS[n_words]
 
 
-def _simhash_words_arrow(tokf: DataFrame, n_words: int) -> DataFrame:
-    """Portable-hash fingerprint WORDS (no band columns) from a
-    ``(_id, _tok)`` token-array frame via the Arrow kernel."""
-    word_names = ["simhash"] + [f"simhash{w}" for w in range(1, n_words)]
+def _word_names(n_words: int) -> list[str]:
+    return ["simhash"] + [f"simhash{w}" for w in range(1, n_words)]
+
+
+def _simhash_words(
+    tokf: DataFrame, portable_hash: bool, n_words: int
+) -> DataFrame:
+    """Fingerprint words ``(_id, simhash[, simhash1..])`` of a
+    ``(_id, _tok)`` token-array frame; a doc with no tokens gets no row.
+
+    Portable md5 words come from the Arrow kernel
+    (:func:`_simhash_words_udf`): the token stream never explodes into a
+    60·W-column shuffle agg. xxhash64 words come from the JVM aggregate
+    :func:`_simhash_words_jvm` (no Python twin of Spark's xxhash64
+    protocol exists)."""
+    if not portable_hash:
+        return _simhash_words_jvm(tokf, False, n_words)
+    if n_words > 2:
+        raise ValueError("portable_hash supports at most 2 words (md5 is 128 bits)")
     words = tokf.filter(F.size("_tok") > 0).select(
         "_id", _simhash_words_udf(n_words)(F.col("_tok")).alias("_w")
     )
     return words.select(
         "_id",
-        *[F.col("_w")[w].alias(word_names[w]) for w in range(n_words)],
+        *[F.col("_w")[w].alias(name) for w, name in enumerate(_word_names(n_words))],
     )
 
 
-def _simhash_fps_arrow(
-    tokf: DataFrame, n_bands: int, n_words: int
+def _simhash_words_jvm(
+    tokf: DataFrame, portable_hash: bool, n_words: int
 ) -> DataFrame:
-    """Portable-hash fingerprint frame from a ``(_id, _tok)`` token-array
-    frame via the Arrow kernel — same schema and values as
-    :func:`_simhash_fps_on_tok` over the exploded tokens (docs with no
-    tokens produce no row there — the explode drops them — so they are
-    filtered here)."""
-    word_bits, word_names, bands_per_word = _band_layout(n_bands, True, n_words)
-    out = _simhash_words_arrow(tokf, n_words)
-    return _attach_band_cols(out, word_names, bands_per_word, word_bits)
-
-
-def _simhash_fps_on_tok(
-    tok: DataFrame, n_bands: int, portable_hash: bool, n_words: int
-) -> DataFrame:
-    """Bit-vote + band assembly of :func:`simhash_fingerprints`, over an
-    already-exploded ``(_id, t)`` token frame — shared by the fused
-    collapse path (tokens come from the cached token array, text is not
-    re-tokenized) and the direct text path."""
-    word_bits, word_names, bands_per_word = _band_layout(
-        n_bands, portable_hash, n_words
-    )
-    out = _simhash_words_on_tok(tok, portable_hash, n_words)
-    return _attach_band_cols(out, word_names, bands_per_word, word_bits)
-
-
-def _simhash_words_on_tok(
-    tok: DataFrame, portable_hash: bool, n_words: int
-) -> DataFrame:
-    """Bit-vote fingerprint WORDS (no band columns, no layout warning) over
-    an exploded ``(_id, t)`` token frame."""
+    """Bit-vote fingerprint words by JVM aggregation over the exploded
+    tokens of a ``(_id, _tok)`` frame: n_words·word_bits conditional sums,
+    all map-side combinable. Serves xxhash64; its md5 branch is the
+    reference the Arrow kernel is tested against."""
     word_bits = 60 if portable_hash else 64
-    word_names = ["simhash"] + [f"simhash{w}" for w in range(1, n_words)]
+    tok = tokf.select("_id", F.explode("_tok").alias("t"))
     for w in range(n_words):
         tok = tok.withColumn(f"h{w}", _word_hash(w, portable_hash))
     one = F.lit(1).cast("long")
@@ -1269,7 +1228,7 @@ def _simhash_words_on_tok(
     ]
     agg = tok.groupBy("_id").agg(*votes)
     fps = []
-    for w in range(n_words):
+    for w, name in enumerate(_word_names(n_words)):
         fp = F.lit(0).cast("long")
         for i in range(word_bits):
             # bits are disjoint → OR assembles the word without overflow
@@ -1278,7 +1237,7 @@ def _simhash_words_on_tok(
                     F.lit(0).cast("long")
                 )
             )
-        fps.append(fp.alias(word_names[w]))
+        fps.append(fp.alias(name))
     return agg.select("_id", *fps)
 
 
@@ -1287,27 +1246,22 @@ def simhash_near_dup_pairs(
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    n_bands: int | None = None,
     portable_hash: bool = False,
     n_words: int = 1,
     collapse_identical: bool = True,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(fingerprint) ≤ max_hamming.
 
-    Candidates via band equality, then exact popcount filter. Returns
-    (id_a, id_b, hamming). Multi-word fingerprints (``n_words``) compute
-    hamming as the sum of per-word popcounts; see
+    Candidates via one pigeonhole chunk join (:func:`_simhash_scheme`,
+    :func:`_simhash_join`), then exact popcount filter. Returns
+    (id_a, id_b, hamming). The candidate join misses no pair, so the
+    output EQUALS the exact hamming-≤r pair set of the fingerprints (not
+    a recall-lossy approximation). Multi-word fingerprints (``n_words``)
+    compute hamming as the sum of per-word popcounts; see
     :func:`simhash_fingerprints` for why wide fingerprints are the
     scale-safe way to run large radii (band width ≥ 12 bits keeps band
-    self-joins sub-quadratic; a warning fires otherwise).
-
-    ``n_bands`` defaults to ``max_hamming + 1``, which makes the banding
-    EXHAUSTIVE by pigeonhole: a pair within Hamming ≤ r differs in at most
-    r of the n_bands > r disjoint bands, so at least one band matches —
-    the output then EQUALS the exact hamming-≤r pair set of the
-    fingerprints (not a recall-lossy approximation). Fewer bands trade
-    completeness for fewer candidate collisions; the round-1 default
-    (4 × 16-bit bands) is exhaustive only up to r=3.
+    self-joins sub-quadratic; a warning fires when the join has to fall
+    back to narrower bands).
 
     ``collapse_identical`` (default on): identical token streams mine as
     one representative, pairs expanded back exactly afterwards (hamming 0
@@ -1317,13 +1271,17 @@ def simhash_near_dup_pairs(
     tokenization (:func:`_fused_token_collapse`), so the guard costs no
     extra text pass and the ≥1-token eligibility predicate reads the
     cached token count."""
-    if n_bands is None:
-        n_bands = max_hamming + 1
+    k, chunks = _simhash_scheme(60 if portable_hash else 64, n_words, max_hamming)
+    if k == 0:
+        _warn_narrow(chunks)
+
+    def mk(tokf: DataFrame) -> DataFrame:
+        # over a prepared (materialized) (_id, _tok, ...) token-array frame
+        fps = _materialize(_simhash_words(tokf, portable_hash, n_words))
+        return _simhash_join(fps, k, chunks, max_hamming)
+
     if collapse_identical:
         tokf, groups, clones, small = _fused_token_collapse(df, id_col, text_col)
-        mk = lambda frame: _simhash_pairs_on_tokens(  # noqa: E731
-            frame, max_hamming, n_bands, portable_hash, n_words
-        )
         if not clones:
             return mk(tokf.drop("_tfp"))
         rep_pairs = mk(_rep_rows(tokf, groups))
@@ -1333,245 +1291,184 @@ def simhash_near_dup_pairs(
         return _expand_pairs_multi(
             rep_pairs, members_multi, mined, "hamming", 0, small
         )
-    tokf = _materialize(
-        df.select(F.col(id_col).alias("_id"), tokens(text_col).alias("_tok"))
-    )
-    return _simhash_pairs_on_tokens(
-        tokf, max_hamming, n_bands, portable_hash, n_words
-    )
+    tokf = df.select(F.col(id_col).alias("_id"), tokens(text_col).alias("_tok"))
+    return mk(_materialize(tokf))
 
 
-def _chunk_layout(
-    word_bits: int, n_words: int, max_hamming: int
-) -> tuple[int, int, list[tuple[int, int, int]]] | None:
-    """Pigeonhole QUERY-EXPANSION layout for the exact hamming-≤r join
-    (used when exhaustive banding would need sub-12-bit bands): the
-    fingerprint's n_words·word_bits bits are covered by ``m`` disjoint
-    chunks with m = ⌊r/3⌋+1 (so 3m > r and k = ⌊r/m⌋ ≤ 2); by pigeonhole
-    a pair within hamming ≤ r agrees within ≤ k bits on SOME chunk, so
-    expanding one side by all ≤k-bit flips of each chunk and equi-joining
-    on (chunk idx, value) is EXACT-recall. Returns (m, k, chunks) with
-    chunks = [(word idx, bit offset, width)], or None when the layout is
-    unusable (chunks too wide for a bounded expansion, or r < 3)."""
-    if max_hamming < 3:
-        return None
-    m = max(max_hamming // 3 + 1, n_words)
-    k = max_hamming // m
+def _simhash_chunks(
+    word_bits: int, n_words: int, n_chunks: int
+) -> list[tuple[int, int, int]]:
+    """``n_chunks`` disjoint contiguous bit chunks of an ``n_words``-word
+    fingerprint as (word idx, bit offset, width): the chunk count is
+    spread near-equally over the words (the first words take the extra
+    ones; a word gets none when n_chunks < n_words) and each word is
+    split into near-equal widths. The band columns of
+    :func:`simhash_fingerprints` and the candidate join share it."""
     chunks: list[tuple[int, int, int]] = []
-    per_word = _band_widths(m, n_words) if n_words > 1 else [m]
-    for w, nc in enumerate(per_word):
+    for w, nc in enumerate(_band_widths(n_chunks, n_words)):
         off = 0
         for width in _band_widths(word_bits, nc) if nc > 0 else []:
             chunks.append((w, off, width))
             off += width
+    return chunks
+
+
+def _simhash_scheme(
+    word_bits: int, n_words: int, max_hamming: int
+) -> tuple[int, list[tuple[int, int, int]]]:
+    """(k, chunks) of the exact hamming-≤r candidate join.
+
+    Pigeonhole (the block split of Manku et al., WWW 2007): a pair within
+    hamming ≤ r differs in ≤ r bits, so over m disjoint chunks it agrees
+    within k = ⌊r/m⌋ bits on SOME chunk. Joining every ≤k-bit flip of each
+    chunk against the exact chunk values therefore misses no pair.
+
+    - k = 0 with m = r+1 chunks is exhaustive banding: some chunk is
+      equal. It is the choice when every chunk is ≥12 bits (≥4096
+      buckets), and the fallback when the bounded expansion below cannot
+      be used — narrow bands then, with the warning.
+    - Otherwise (the narrow-band case that degenerates: at 60 bits / r=8
+      the 9 bands are 6-7 bits wide, ≤128 buckets, and the measured
+      candidate stream at 50k docs was 9.1×10⁸ pairs) m = max(⌊r/3⌋+1,
+      n_words), so 3m > r and k ≤ 2: three 20-bit chunks at 60/r=8,
+      whose wider keys cut the measured candidate stream 3.9× (9.1×10⁸ →
+      2.3×10⁸) for 1+w+C(w,2) = 211 probe rows per chunk."""
+    bands = _simhash_chunks(word_bits, n_words, max_hamming + 1)
+    if min(width for _, _, width in bands) >= 12:
+        return 0, bands
+    m = max(max_hamming // 3 + 1, n_words)
+    k = max_hamming // m
+    chunks = _simhash_chunks(word_bits, n_words, m)
     # expansion size per chunk is C(width,0..k) — cap it so the probe-side
-    # blowup stays bounded (~250 rows/chunk at 20 bits, k=2)
-    if any(width > 30 or width < k + 1 for _, _, width in chunks):
-        return None
-    return m, k, chunks
+    # blowup stays bounded (≤466 rows/chunk at 30 bits, k=2)
+    if all(k < width <= 30 for _, _, width in chunks):
+        return k, chunks
+    return 0, bands
 
 
-def _simhash_pairs_on_tokens(
-    tokf: DataFrame,
-    max_hamming: int,
-    n_bands: int,
-    portable_hash: bool,
-    n_words: int,
-) -> DataFrame:
-    """Candidate generation + exact popcount filter of
-    :func:`simhash_near_dup_pairs`, over a prepared (materialized)
-    ``(_id, _tok, ...)`` token-array frame.
-
-    Portable mode fingerprints via the Arrow kernel
-    (:func:`_simhash_words_arrow`): same words bit-for-bit, but the token
-    stream never explodes into a 60·W-column shuffle agg. The xxhash64
-    mode keeps the JVM agg (no Python md5 twin exists for Spark's
-    xxhash64 protocol).
-
-    Two exact candidate schemes (round 7):
-
-    - **Band join** — exhaustive n_bands = r+1 banding (or the caller's
-      explicit recall-lossy n_bands): candidates = pairs equal in ≥1
-      band. With narrow bands this degenerates: at 60 bits / r=8 the
-      9 bands are 6-7 bits wide (≤128 buckets) and the measured candidate
-      stream at 50k docs was 9.1×10⁸ pairs — the join spends its whole
-      wall time PRODUCING rows that the popcount immediately discards.
-    - **Pigeonhole query expansion** (:func:`_chunk_layout`) — used
-      automatically when banding is exhaustive AND its narrowest band
-      would be <12 bits: cover the fingerprint with m = ⌊r/3⌋+1 chunks
-      (20 bits each at 60/r=8), so a qualifying pair agrees within
-      k = ⌊r/m⌋ ≤ 2 bits on some chunk; one side explodes to its
-      1+w+C(w,2) ≤k-bit chunk flips (211/chunk at 20 bits) and
-      equi-joins the other side's exact chunk values. Wider keys cut the
-      measured candidate stream 3.9× (9.1×10⁸ → 2.3×10⁸) and the probe
-      side is a pure projection of the cached fingerprint frame, so the
-      only exchange left is the tiny survivor distinct. The planner
-      broadcasts the exact side at bench scale (3 rows/doc); at corpus
-      scales past the broadcast bound the same plan becomes a shuffle
-      join on (chunk, value) and keeps the candidate reduction.
-
-    Both schemes are EXACT (the output is the full hamming-≤r pair set),
-    so they are interchangeable only in the exhaustive case — a caller
-    forcing a recall-lossy n_bands keeps the band join, whose output the
-    banding itself defines."""
-    word_bits = 60 if portable_hash else 64
-    layout = None
-    if n_bands == max_hamming + 1:
-        per_word = _band_widths(n_bands, n_words) if n_words > 1 else [n_bands]
-        min_band_w = min(
-            bw
-            for nb in per_word
-            if nb > 0
-            for bw in _band_widths(word_bits, nb)
-        )
-        if min_band_w < 12:
-            layout = _chunk_layout(word_bits, n_words, max_hamming)
-    word_names = ["simhash"] + [f"simhash{w}" for w in range(1, n_words)]
-    if layout is not None:
-        if portable_hash:
-            fps = _materialize(_simhash_words_arrow(tokf, n_words))
-        else:
-            fps = _materialize(
-                _simhash_words_on_tok(
-                    tokf.select("_id", F.explode("_tok").alias("t")),
-                    portable_hash,
-                    n_words,
-                )
-            )
-        # MEASURED broadcast decision (same discipline as
-        # _BROADCAST_MEMBERS): the count() rides the just-persisted frame
-        # — the first action would materialize it anyway. The exact side
-        # is m rows/doc of ~32 bytes; under the cap it broadcasts and the
-        # probe side becomes a pure scan→explode→probe pipeline with NO
-        # exchange (the static planner can't see this through the
-        # Generate, and AQE still leaves the probe-side shuffle files).
-        # Past the cap the join falls back to the planner's shuffle
-        # strategy, which keeps the candidate reduction.
-        small = fps.count() * len(layout[2]) <= 2_000_000
-        return _simhash_pairs_expansion(
-            fps, word_names, max_hamming, layout, small
-        )
-    if portable_hash:
-        fps = _materialize(_simhash_fps_arrow(tokf, n_bands, n_words))
-    else:
-        fps = _materialize(
-            _simhash_fps_on_tok(
-                tokf.select("_id", F.explode("_tok").alias("t")),
-                n_bands=n_bands,
-                portable_hash=portable_hash,
-                n_words=n_words,
-            )
-        )
-    # ONE self-join on exploded (band index, band value) keys — not
-    # n_bands separate self-joins unioned (round-7: the unioned plan paid
-    # 2×n_bands exchanges + a union before the distinct; the exploded join
-    # shuffles the same rows once and keeps the identical candidate set,
-    # since (bidx, bval) equality ⟺ equality in that band)
-    bucketed = fps.select(
-        "_id",
-        *word_names,
-        F.posexplode(
-            F.array(*[F.col(f"band{b}") for b in range(n_bands)])
-        ).alias("bidx", "bval"),
-    )
-    a, c = bucketed.alias("a"), bucketed.alias("b")
-    cands = (
-        a.join(c, on=["bidx", "bval"])
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            *[F.col(f"a.{wn}").alias(f"sha_{w}") for w, wn in enumerate(word_names)],
-            *[F.col(f"b.{wn}").alias(f"shb_{w}") for w, wn in enumerate(word_names)],
-        )
-    )
-    hamming = None
-    for w in range(n_words):
-        h = F.bit_count(F.col(f"sha_{w}").bitwiseXOR(F.col(f"shb_{w}")))
-        hamming = h if hamming is None else hamming + h
-    # popcount-filter BEFORE the distinct (round 7): the narrow exhaustive
-    # bands make the raw candidate stream O(Σ bucket²) rows — ~10⁸ at 50k
-    # docs with 60-bit/9-band fingerprints — and `distinct()` first paid a
-    # full exchange of all of them (32-byte rows, multi-GB). The hamming
-    # filter is a pure per-row function of (sha, shb), which are constants
-    # per doc pair, so filter∘distinct ≡ distinct∘filter — row-identical —
-    # but the filter runs inside the join's whole-stage-codegen pipeline
-    # and only TRUE near-dups (a ~10⁴× smaller set) reach the exchange.
-    return (
-        cands.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-        .distinct()
-    )
-
-
-def _simhash_pairs_expansion(
-    fps: DataFrame,
-    word_names: list[str],
-    max_hamming: int,
-    layout: tuple[int, int, list[tuple[int, int, int]]],
-    small: bool = False,
-) -> DataFrame:
-    """Pigeonhole query-expansion candidate join over a materialized
-    ``(_id, simhash[, simhash1..])`` fingerprint frame — see
-    :func:`_simhash_pairs_on_tokens` for the scheme and its exactness
-    argument. One side carries every ≤k-bit flip of each chunk (a pure
-    projection+explode of the cached frame — no shuffle); the other
-    carries the exact chunk values; survivors of the in-join popcount
-    filter are the only rows that ever reach an exchange."""
-    from itertools import combinations
-
-    _, k, chunks = layout
-    chunk_vals = [
-        F.shiftrightunsigned(F.col(word_names[w]), off).bitwiseAND(
+def _chunk_values(
+    fps: DataFrame, chunks: list[tuple[int, int, int]]
+) -> list["F.Column"]:
+    """Chunk value columns over a ``(_id, simhash[, simhash1..])`` frame."""
+    words = fps.columns[1:]
+    return [
+        F.shiftrightunsigned(F.col(words[w]), off).bitwiseAND(
             F.lit((1 << width) - 1)
         )
-        for (w, off, width) in chunks
+        for w, off, width in chunks
     ]
-    # One probe branch per chunk, unioned: each branch explodes a LITERAL
-    # flip array (constant-folded to a single array object) and XORs the
-    # chunk value AFTER the explode. Building one array of 633 xor-structs
-    # per row instead blew the whole-stage-codegen method limit and
-    # de-codegen'd the entire probe stage — explode, join, popcount and
+
+
+def _broadcast_fits(df: DataFrame, rows: int) -> bool:
+    """Whether ``rows`` rows of ``df``'s schema fit the session's runtime
+    broadcast threshold (``spark.sql.adaptive.autoBroadcastJoinThreshold``,
+    falling back to the static one when unset, as Spark does; negative
+    disables). A row counts as the UnsafeRow a broadcast hash relation
+    holds: a null-bit word, an 8-byte slot per column, and Spark's 20-byte
+    default payload per string or binary column."""
+    conf = df.sparkSession.conf
+    raw = conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold") or conf.get(
+        "spark.sql.autoBroadcastJoinThreshold"
+    )
+    num, unit = re.fullmatch(r"(-?\d+)([kmgtp]?)b?", raw.strip().lower()).groups()
+    shift = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}[unit]
+    row_bytes = 8 + sum(
+        8 + (20 if f.dataType.typeName() in ("string", "binary") else 0)
+        for f in df.schema.fields
+    )
+    return rows * row_bytes <= int(num) << shift
+
+
+def _simhash_join(
+    fps: DataFrame,
+    k: int,
+    chunks: list[tuple[int, int, int]],
+    max_hamming: int,
+) -> DataFrame:
+    """The exact hamming-≤r pair set of a materialized
+    ``(_id, simhash[, simhash1..])`` fingerprint frame, via the chunk
+    layout ``(k, chunks)`` of :func:`_simhash_scheme`.
+
+    The exact side carries each doc's chunk values, one row per (chunk
+    idx, value). The probe side carries every ≤k-bit flip of each chunk;
+    at k = 0 it is the exact side itself (the band self-join). The two
+    equi-join on (chunk idx, value) — ONE join on exploded keys, not one
+    join per chunk unioned (round-7: the unioned band plan paid 2×n_bands
+    exchanges + a union before the distinct; the exploded join shuffles
+    the same rows once and keeps the identical candidate set) — and the
+    survivors of the in-join popcount filter are the only rows that ever
+    reach an exchange."""
+    words = fps.columns[1:]
+    cvals = _chunk_values(fps, chunks)
+
+    def side(tag: str) -> DataFrame:
+        return fps.select(
+            F.col("_id").alias(f"id_{tag}"),
+            *[F.col(wn).alias(f"sh{tag}_{w}") for w, wn in enumerate(words)],
+            F.posexplode(F.array(*cvals)).alias("ci", "cv"),
+        )
+
+    # k > 0: one probe branch per chunk, unioned: each branch explodes a
+    # LITERAL flip array (constant-folded to a single array object) and
+    # XORs the chunk value AFTER the explode. Building one array of 633
+    # xor-structs per row instead blew the whole-stage-codegen method limit
+    # and de-codegen'd the entire probe stage — explode, join, popcount and
     # the distinct's partial aggregate all ran interpreted, measured ~10×
     # slower than this shape on the same candidate volume.
-    sha_cols = [
-        F.col(wn).alias(f"sha_{w}") for w, wn in enumerate(word_names)
-    ]
-    probe = None
-    for ci, ((_, _, width), cv) in enumerate(zip(chunks, chunk_vals)):
-        flips = [0]
-        if k >= 1:
-            flips += [1 << p for p in range(width)]
-        if k >= 2:
-            flips += [
-                (1 << p) | (1 << q) for p, q in combinations(range(width), 2)
-            ]
-        branch = fps.select(
+    def flipped(ci: int, width: int, cv: "F.Column") -> DataFrame:
+        flips = [
+            sum(1 << p for p in bits)
+            for j in range(k + 1)
+            for bits in combinations(range(width), j)
+        ]
+        return fps.select(
             F.col("_id").alias("id_a"),
-            *sha_cols,
+            *[F.col(wn).alias(f"sha_{w}") for w, wn in enumerate(words)],
             F.lit(ci).alias("ci"),
             cv.alias("_cv0"),
-            F.explode(F.array(*[F.lit(int(f)) for f in flips])).alias("_f"),
+            F.explode(F.array(*[F.lit(f) for f in flips])).alias("_f"),
         ).select(
             "id_a",
-            *[f"sha_{w}" for w in range(len(word_names))],
+            *[f"sha_{w}" for w in range(len(words))],
             "ci",
             F.col("_cv0").bitwiseXOR(F.col("_f")).alias("cv"),
         )
-        probe = branch if probe is None else probe.unionByName(branch)
-    exact = fps.select(
-        F.col("_id").alias("id_b"),
-        *[F.col(wn).alias(f"shb_{w}") for w, wn in enumerate(word_names)],
-        F.posexplode(F.array(*chunk_vals)).alias("ci", "cv"),
+
+    exact = side("b")
+    probe = side("a") if k == 0 else reduce(
+        DataFrame.unionByName,
+        [
+            flipped(ci, width, cv)
+            for ci, ((_, _, width), cv) in enumerate(zip(chunks, cvals))
+        ],
     )
+    # MEASURED broadcast decision: the count() rides the just-persisted
+    # fingerprint frame — the first action would materialize it anyway.
+    # Under the byte cap the exact side broadcasts and the probe side
+    # becomes a pure scan→explode→probe pipeline with NO exchange (the
+    # static planner can't see this through the Generate, and AQE still
+    # leaves the probe-side shuffle files). Past the cap the join falls
+    # back to the planner's shuffle strategy, which keeps the candidate
+    # reduction.
+    small = _broadcast_fits(exact, fps.count() * len(chunks))
     cands = probe.join(_maybe_broadcast(exact, small), on=["ci", "cv"]).filter(
         F.col("id_a") < F.col("id_b")
     )
-    hamming = None
-    for w in range(len(word_names)):
-        h = F.bit_count(F.col(f"sha_{w}").bitwiseXOR(F.col(f"shb_{w}")))
-        hamming = h if hamming is None else hamming + h
+    hamming = reduce(
+        operator.add,
+        [
+            F.bit_count(F.col(f"sha_{w}").bitwiseXOR(F.col(f"shb_{w}")))
+            for w in range(len(words))
+        ],
+    )
+    # popcount-filter BEFORE the distinct (round 7): narrow bands make the
+    # raw candidate stream O(Σ bucket²) rows — ~10⁸ at 50k docs with
+    # 60-bit/9-band fingerprints — and `distinct()` first paid a full
+    # exchange of all of them (32-byte rows, multi-GB). The hamming filter
+    # is a pure per-row function of (sha, shb), which are constants per
+    # doc pair, so filter∘distinct ≡ distinct∘filter — row-identical — but
+    # the filter runs inside the join's whole-stage-codegen pipeline and
+    # only TRUE near-dups (a ~10⁴× smaller set) reach the exchange.
     return (
         cands.withColumn("hamming", hamming)
         .filter(F.col("hamming") <= max_hamming)

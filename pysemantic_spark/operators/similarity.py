@@ -27,7 +27,8 @@ One implementation per vector job, shared by every operator:
 - rows → numpy: `_stack` (NULL vectors are filtered before it by every
   operator; a row of the wrong length raises EmbeddingDimensionError);
 - top-k scoring: the interpreted `cosine` in `_score_topk` (only the
-  candidate rows of n_queries reach it);
+  candidate rows of n_queries reach it; a candidate of another length
+  than its query raises EmbeddingDimensionError);
 - all-pairs verify: `_verify_block_pairs`, one normalized float64 GEMM per
   packed block pair, for both `cosine_pairs_exact` and the near-dup path;
 - LSH buckets: `hyperplane_buckets_arrow`, one matmul for all tables (a
@@ -74,11 +75,21 @@ def _score_topk(cand: DataFrame, k: int) -> DataFrame:
     """Score ``(query_id, vec_id, _cvec, _qvec)`` candidate rows with the
     interpreted :func:`cosine` (rounded to 6 dp) and keep each query's top
     k, ties broken by vec_id for determinism — the shared tail of the
-    three top-k paths."""
+    three top-k paths. A candidate whose length differs from its query's
+    raises EmbeddingDimensionError: the ``zip_with`` fold would pad the
+    short side with NULL and score a NULL cosine (only cosine_topk's rows
+    reach here unchecked; the LSH and IVF paths ``_stack`` theirs first)."""
+    cvec, qvec = F.col("_cvec"), F.col("_qvec")
+    ragged = F.format_string(
+        "EmbeddingDimensionError: embedding row has length %d, expected %d",
+        F.size(cvec),
+        F.size(qvec),
+    )
+    cos = F.when(F.size(cvec) == F.size(qvec), cosine(cvec, qvec)).otherwise(
+        F.raise_error(ragged)
+    )
     scored = cand.select(
-        "query_id",
-        "vec_id",
-        F.round(cosine(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
+        "query_id", "vec_id", F.round(cos, 6).alias("cos_sim")
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("vec_id").asc()
@@ -102,7 +113,9 @@ def cosine_topk(
 
     Queries broadcast (small side); per-query top-k via window row_number —
     Catalyst turns the per-group sort into partial top-k with AQE.
-    Ties broken by vec_id for determinism. NULL vectors score nothing."""
+    Ties broken by vec_id for determinism. NULL vectors score nothing; a
+    vector whose length differs from its query's raises
+    EmbeddingDimensionError."""
     q = queries.filter(F.col(vec_col).isNotNull()).select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
     )

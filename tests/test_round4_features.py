@@ -1,10 +1,8 @@
-"""Round-4 additions: keep-first dup-split, multi-word simhash, prefix
-filtering, legacy YAML tags, dotted converters, cache release."""
+"""Round-4 additions: keep-first dup-split, prefix filtering, legacy YAML
+tags, dotted converters, cache release. (The multi-word SimHash tests live
+with the other SimHash tests in test_dedup_similarity_text.py.)"""
 
 from __future__ import annotations
-
-import random
-import warnings
 
 import numpy as np
 import pandas as pd
@@ -71,83 +69,11 @@ def test_keep_first_window_input_is_dup_split_not_full_scan(spark):
 
 
 # ---------------------------------------------------------------------------
-# multi-word simhash
-# ---------------------------------------------------------------------------
-
-def _rand_docs(n_docs=40, seed=7):
-    rng = random.Random(seed)
-    vocab = [f"w{i}" for i in range(50)]
-    docs = []
-    for i in range(n_docs):
-        base = [rng.choice(vocab) for _ in range(30)]
-        docs.append((i, " ".join(base)))
-        if rng.random() < 0.5:  # planted near-dup: few token edits
-            mut = list(base)
-            for _ in range(rng.randint(1, 3)):
-                mut[rng.randrange(len(mut))] = rng.choice(vocab)
-            docs.append((1000 + i, " ".join(mut)))
-    return docs
-
-
-def test_multiword_simhash_equals_brute_force(spark):
-    """Property: exhaustive banding over a 2-word (128-bit) fingerprint
-    returns EXACTLY the hamming<=r pair set of the fingerprints."""
-    docs = _rand_docs()
-    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
-    r = 8
-    with tracked_intermediates():
-        got = {
-            (x["id_a"], x["id_b"], x["hamming"])
-            for x in dedup.simhash_near_dup_pairs(
-                df, "doc_id", "text", max_hamming=r, n_words=2
-            ).collect()
-        }
-        fps = (
-            dedup.simhash_fingerprints(df, "doc_id", "text", n_bands=9, n_words=2)
-            .select("_id", "simhash", "simhash1")
-            .collect()
-        )
-    mask = (1 << 64) - 1
-    exp = set()
-    for i, a in enumerate(fps):
-        for b in fps[i + 1:]:
-            h = bin((a["simhash"] ^ b["simhash"]) & mask).count("1") + bin(
-                (a["simhash1"] ^ b["simhash1"]) & mask
-            ).count("1")
-            if h <= r:
-                lo, hi = sorted((a["_id"], b["_id"]))
-                exp.add((lo, hi, h))
-    assert got == exp
-    assert exp, "fixture produced no near-dup pairs — test is vacuous"
-
-
-def test_simhash_band_width_warning(spark):
-    docs = _rand_docs(n_docs=5)
-    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
-    with pytest.warns(UserWarning, match="narrowest band"):
-        dedup.simhash_fingerprints(df, "doc_id", "text", n_bands=9, n_words=1)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # 2 words x 9 bands -> >=12-bit bands
-        dedup.simhash_fingerprints(df, "doc_id", "text", n_bands=9, n_words=2)
-
-
-def test_single_word_simhash_layout_unchanged(spark):
-    """n_words=1 must keep the round-3 schema (simhash + band0..3) so the
-    portable DuckDB oracle stays byte-identical."""
-    docs = _rand_docs(n_docs=5)
-    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
-    cols = dedup.simhash_fingerprints(
-        df, "doc_id", "text", n_bands=4, portable_hash=True
-    ).columns
-    assert cols == ["_id", "simhash", "band0", "band1", "band2", "band3"]
-
-
-# ---------------------------------------------------------------------------
 # ngram prefix filter
 # ---------------------------------------------------------------------------
 
-def test_ngram_prefix_filter_exact_recall(spark):
-    docs = _rand_docs(n_docs=30, seed=11)
+def test_ngram_prefix_filter_exact_recall(spark, rand_docs):
+    docs = rand_docs(n_docs=30, seed=11)
     df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
     with tracked_intermediates():
         with_f = {
@@ -166,8 +92,8 @@ def test_ngram_prefix_filter_exact_recall(spark):
     assert with_f, "no pairs above threshold — vacuous"
 
 
-def test_ngram_prefix_index_shrinks(spark):
-    docs = _rand_docs(n_docs=30, seed=11)
+def test_ngram_prefix_index_shrinks(spark, rand_docs):
+    docs = rand_docs(n_docs=30, seed=11)
     df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
     with tracked_intermediates():
         sh = dedup._materialize(
@@ -278,10 +204,10 @@ def _persistent_rdd_count(spark) -> int:
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
 
-def test_dedup_operators_release_intermediates(spark):
+def test_dedup_operators_release_intermediates(spark, rand_docs):
     release_intermediates()
     base = _persistent_rdd_count(spark)
-    docs = _rand_docs(n_docs=10)
+    docs = rand_docs(n_docs=10)
     df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
     dedup.ngram_jaccard_pairs(df, "doc_id", "text", n=2, threshold=0.5).count()
     dedup.minhash_lsh_pairs(
@@ -327,7 +253,7 @@ def test_similarity_operators_release_intermediates(spark):
     assert _persistent_rdd_count(spark) <= base
 
 
-def test_queries_wrapper_releases_previous_intermediates(spark):
+def test_queries_wrapper_releases_previous_intermediates(spark, rand_docs):
     import __spark_entry__ as entry
 
     qs = entry.queries()
@@ -335,7 +261,7 @@ def test_queries_wrapper_releases_previous_intermediates(spark):
     assert "streaming_drift_events" in qs
     assert "streaming_drift_events" in entry.oracle_sql()
     # the wrapper must call release on entry: simulate a leftover
-    docs = pd.DataFrame(_rand_docs(n_docs=4), columns=["doc_id", "text"])
+    docs = pd.DataFrame(rand_docs(n_docs=4), columns=["doc_id", "text"])
     from pysemantic_spark.operators.cache import materialize
 
     leftover = materialize(spark.createDataFrame(docs))
